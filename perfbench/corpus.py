@@ -1,6 +1,7 @@
-"""``corpus_pipeline``: passes of four ``__spark_entry__.queries()`` over a
-generated ``documents`` table, each answer checked against the repo's own
-DuckDB oracle SQL, evaluated once before the session starts.
+"""The corpus queries of ``scan_corpus``: passes of four
+``__spark_entry__.queries()`` over a generated ``documents`` table, each
+answer checked against the repo's own DuckDB oracle SQL, evaluated once
+before the session starts.
 
 ``minhash_lsh_pairs`` is left out: ``near_dedup_survivors`` runs the same
 ``minhash_near_dup_pairs`` candidate-and-verify stage (``minhash_dedup`` is

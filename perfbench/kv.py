@@ -1,4 +1,4 @@
-"""``kv_read`` and ``txn_mixed``: clients of one ``SnapshotStore`` of orders.
+"""``txn_mixed``: one writer and two readers of a ``SnapshotStore`` of orders.
 
 Keys are ``o_orderkey = 4 * i`` for ``i < 150_000``; the model knows every
 base row and, per committed store version, the writer's changes on top.
@@ -7,14 +7,13 @@ base row and, per committed store version, the writer's changes on top.
 from __future__ import annotations
 
 import collections
-import glob
-import json
 import os
 import threading
 from typing import Any, Optional
 
 import numpy as np
 import pyarrow as pa
+from index_spark.catalog import read_latest
 
 from perfbench import datagen
 from perfbench.loop import Client, Op, Schedule
@@ -26,6 +25,7 @@ ROWS_PER_FILE = 10_000
 N = datagen.ORDERS_ROWS
 S = datagen.KEY_STRIDE
 ZIPF_S = 0.99
+MANIFEST = "_manifest"  # the SnapshotStore's catalog name
 
 
 def row_tuple(r) -> tuple:
@@ -98,13 +98,11 @@ def orders_table(seed: int) -> tuple[pa.Table, str]:
     return t.append_column(VERSION_COL, pa.array([base_version] * t.num_rows)), base_version
 
 
-def build_store(spark, path: str, src: str, blooms: bool):
+def build_store(spark, path: str, src: str):
     from index_spark import SnapshotStore
 
     store = SnapshotStore(spark, path)
     store.create([KEY], spark.read.parquet(src), rows_per_partition=ROWS_PER_FILE)
-    if blooms:
-        store.build_blooms()
     return store
 
 
@@ -117,55 +115,12 @@ def _expect(rows, want: list[tuple], ordered: bool = True) -> Optional[str]:
     return None
 
 
-# ---------------------------------------------------------------- kv_read
-class KvReader(Client):
-    """60% read_point, 15% read_points(16), 15% read_range(100 keys),
-    10% next_key / previous_key, interleaved by a :class:`Schedule`; every
-    op opens the head with latest()."""
-
-    def __init__(self, store, model: OrdersModel, zipf: Zipf, rng: np.random.Generator):
-        self.store, self.model, self.zipf, self.rng = store, model, zipf, rng
-        self.schedule = Schedule({"point": 12, "multiget": 3, "range": 3, "nextprev": 2})
-
-    def next_op(self) -> Op:
-        rng, m = self.rng, self.model
-        ov: dict = {}
-        kind = self.schedule.next()
-        if kind == "point":
-            k = int(self.zipf.draw(rng)) * S
-            return ("point", lambda: self.store.latest().read_point(k).collect(),
-                    lambda rows: _expect(rows, [m.base_row(k)]))
-        if kind == "multiget":
-            ks = sorted({int(i) * S for i in self.zipf.draw(rng, 16)})
-            return ("multiget", lambda: self.store.latest().read_points(ks).collect(),
-                    lambda rows: _expect(rows, [m.base_row(k) for k in ks], ordered=False))
-        if kind == "range":
-            i = int(rng.integers(0, N - 100))
-            lo, hi = i * S, (i + 99) * S
-            return ("range", lambda: self.store.latest().read_range(lo, hi).collect(),
-                    lambda rows: _expect(rows, m.rows_between(ov, lo, hi)))
-        i = int(rng.integers(0, N))
-        k = i * S + int(rng.choice([0, S // 2]))  # a stored key or a gap
-        if rng.random() < 0.5:
-            want = m.base_row((i + 1) * S)
-            return ("nextprev", lambda: self.store.latest().next_key(k).collect(),
-                    lambda rows: _expect(rows, [want] if want else []))
-        prev = k - S if k % S == 0 else i * S
-        want = m.base_row(prev)
-        return ("nextprev", lambda: self.store.latest().previous_key(k).collect(),
-                lambda rows: _expect(rows, [want] if want else []))
-
-
 # -------------------------------------------------------------- txn_mixed
-def latest_manifest(store_path: str, with_path: bool = False):
-    """The newest committed manifest, read straight from disk (kept out of
-    the traced catalog layer so accounting does not count as catalog work);
-    with its path when ``with_path``."""
-    paths = glob.glob(os.path.join(store_path, "_manifest.v*.json"))
-    newest = max(paths, key=lambda p: int(p.rsplit(".v", 1)[1].split(".")[0]))
-    with open(newest) as f:
-        m = json.load(f)
-    return (m, newest) if with_path else m
+def head_version(store_path: str) -> dict:
+    """The head version entry of the newest committed manifest.
+    ``read_latest`` is bound at import, before the traced run patches the
+    catalog module, so this bookkeeping records no catalog spans."""
+    return read_latest(store_path, MANIFEST)[0]["versions"][-1]
 
 
 def _local(path: str) -> str:
@@ -272,7 +227,7 @@ class TxnWriter(Client):
     def _commit_op(self, cmds: list, changes: dict, txid: str) -> Op:
         base = self.handle
         nxt = {**self.overlay, **changes}
-        before = {f["path"] for f in latest_manifest(self.store.base_path)["versions"][-1]["files"]}
+        before = {f["path"] for f in head_version(self.store.base_path)["files"]}
         self.model.register(base.version + 1, nxt)
 
         def call():
@@ -286,7 +241,7 @@ class TxnWriter(Client):
             self.since_compact += 1
             with self.recent_lock:
                 self.recent.append(list(changes))
-            new = [f for f in latest_manifest(self.store.base_path)["versions"][-1]["files"]
+            new = [f for f in head_version(self.store.base_path)["files"]
                    if f["path"] not in before]
             self.stats.rows += len(changes)
             self.stats.rows_rewritten += sum(f["n_rows"] for f in new)
@@ -332,7 +287,7 @@ class TxnWriter(Client):
         def check(code) -> Optional[str]:
             if code != want:
                 return f"invalid txn returned {code}, want {want}"
-            head = latest_manifest(self.store.base_path)["versions"][-1]["version"]
+            head = head_version(self.store.base_path)["version"]
             if head != base.version:
                 return f"rejected txn moved the head {base.version} -> {head}"
             return None
@@ -356,11 +311,16 @@ class TxnWriter(Client):
 
 class TxnReader(Client):
     """80% point reads of the head (half on keys the writer touched in its
-    last 10 commits, half Zipf over the base keys), 20% 100-key ranges."""
+    last 10 commits, half Zipf over the base keys), 20% 100-key ranges.
+    A reader keeps reading past the deadline until the writer has stopped,
+    so the writer's last commit runs beside readers like every other."""
 
     def __init__(self, store, model: OrdersModel, zipf: Zipf, writer: TxnWriter, rng):
         self.store, self.model, self.zipf, self.writer, self.rng = store, model, zipf, writer, rng
         self.schedule = Schedule({"point": 4, "range": 1})
+
+    def mid_unit(self) -> bool:
+        return super().mid_unit() or self.writer.running
 
     def next_op(self) -> Op:
         rng, m = self.rng, self.model

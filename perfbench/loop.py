@@ -67,6 +67,7 @@ class Client:
     been sent in the phase, so each kind has a sample in every run."""
 
     schedule: Optional[Schedule] = None
+    running = False  # set while closed_loop's thread for this client sends ops
 
     def next_op(self) -> Op:
         raise NotImplementedError
@@ -157,6 +158,12 @@ def closed_loop(clients: list[Client], seconds: float, tracer=None, jobs=None) -
     unit_ends = [deadline]
 
     def worker(client: Client) -> None:
+        try:
+            send(client)
+        finally:
+            client.running = False
+
+    def send(client: Client) -> None:
         while time.perf_counter() < deadline or client.mid_unit():
             op_id = next(_op_ids)
             try:
@@ -195,6 +202,7 @@ def closed_loop(clients: list[Client], seconds: float, tracer=None, jobs=None) -
 
     for c in clients:
         c.restart()
+        c.running = True
     threads = [threading.Thread(target=worker, args=(c,), daemon=True) for c in clients]
     for t in threads:
         t.start()

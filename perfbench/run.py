@@ -9,8 +9,8 @@ end-to-end metrics of ``BENCHMARK.json`` with ``--trace 0``, its per-layer
 metrics with ``--trace 1``. Exits 1 when any op failed its check, 2 when
 the checkout holds no ``index_spark`` package. Everything the run writes
 (data, stores, Spark scratch) lives in ``.perfbench_work/`` in the checkout
-and is removed at exit unless ``--keep``; a traced run writes its spans to
-``--out``. See perfbench/README.md.
+and is removed at exit; a traced run writes its spans to ``--out``. See
+perfbench/README.md.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ sys.path.insert(0, ROOT)
 from perfbench import loop, tracing  # noqa: E402
 from perfbench.loop import pct  # noqa: E402
 
-WORKLOADS = ("txn_mixed", "scan_corpus", "kv_read", "scan_history", "corpus_pipeline")
 WARMUP_S = 1.0
 COMPACT_EVERY = 3  # txn_mixed: successful commits between compactions
 WRITE_KINDS = ("commit", "rejected", "compact")
@@ -45,10 +44,7 @@ CORPUS_KINDS = ("pipeline_end_to_end", "near_dedup_survivors", "text_quality", "
 # every run samples (rare writer ops such as compaction are left out, so
 # one no-op compaction cannot swing the figure).
 GMEAN_KINDS = {
-    "kv_read": ("point", "multiget", "range", "nextprev"),
     "txn_mixed": ("point", "range", "commit"),
-    "scan_history": SCAN_KINDS,
-    "corpus_pipeline": CORPUS_KINDS,
     "scan_corpus": SCAN_KINDS + CORPUS_KINDS,
 }
 
@@ -63,10 +59,6 @@ class Prepared:
     docs: int = 0
 
 
-def _cpus() -> int:
-    return len(os.sched_getaffinity(0))
-
-
 def _configure_env(work: str) -> None:
     """Keep every file Spark and Python write inside the run directory."""
     import tempfile
@@ -78,7 +70,7 @@ def _configure_env(work: str) -> None:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     # every JVM spark-submit starts (its launcher too): no /tmp/hsperfdata_*
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(_cpus()))
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     os.environ["PYSPARK_PYTHON"] = sys.executable
 
@@ -137,90 +129,68 @@ def data_orders(work: str, seed: int):
     return src, kv.OrdersModel(table, base_version), kv.Zipf(kv.N, kv.ZIPF_S, seed)
 
 
-def setup_kv_read(spark, work: str, data, rng_for) -> Prepared:
-    from perfbench import kv
-
-    src, model, zipf = data
-    builds, store = _timed(3, lambda i: kv.build_store(spark, os.path.join(work, f"kv_{i}"), src, blooms=True))
-    clients = [kv.KvReader(store, model, zipf, rng_for(c)) for c in range(_cpus())]
-    return Prepared(clients, builds, stores=[store.base_path])
-
-
 def setup_txn_mixed(spark, work: str, data, rng_for) -> Prepared:
     from perfbench import kv
 
     src, model, zipf = data
-    builds, store = _timed(3, lambda i: kv.build_store(spark, os.path.join(work, f"txn_{i}"), src, blooms=False))
+    builds, store = _timed(3, lambda i: kv.build_store(spark, os.path.join(work, f"txn_{i}"), src))
     writer = kv.TxnWriter(store, model, rng_for(0), COMPACT_EVERY)
     writer.reject_each_kind()
     readers = [kv.TxnReader(store, model, zipf, writer, rng_for(c)) for c in (1, 2)]
     return Prepared([writer, *readers], builds, stores=[store.base_path], writer=writer)
 
 
-def data_lineitem(work: str, seed: int):
-    from perfbench import datagen, scan
+def data_scan_corpus(work: str, seed: int):
+    from perfbench import corpus, datagen, scan
 
     table = datagen.lineitem(seed)
-    return datagen.write(table, os.path.join(work, "data", "lineitem.parquet")), scan.HistoryModel(table)
+    src = datagen.write(table, os.path.join(work, "data", "lineitem.parquet"))
+    docs = os.path.join(work, "data")
+    datagen.write(datagen.documents(seed), os.path.join(docs, "documents.parquet"))
+    return src, scan.HistoryModel(table), docs, corpus.oracle_answers(docs)
 
 
-def setup_scan_history(spark, work: str, data, rng_for) -> Prepared:
-    """One build per run: the bulk load plus the history commit take
-    ~20 s, too much to repeat inside the per-run time budget."""
-    from perfbench import scan
+def setup_scan_corpus(spark, work: str, data, rng_for) -> Prepared:
+    """One analytics session on a fresh process: the scan ops interleaved
+    with one pass of the corpus queries. A corpus pipeline is a batch job
+    on a fresh session whose users pay each query's first-run costs
+    (Python workers, code generation) every time, so the run is cold: no
+    warm-up (one would cost a whole cycle). One build per run: the bulk
+    load plus the history commit take ~20 s, too much to repeat inside the
+    per-run time budget. The corpus queries read parquet directly and need
+    no build."""
+    from perfbench import corpus, datagen, scan
 
-    src, model = data
+    src, model, docs, oracle = data
     builds, (si, stamps) = _timed(1, lambda i: scan.build(spark, os.path.join(work, "sharded"), src,
                                                           model, rng_for(100)))
     shard_dirs = sorted(os.path.join(si.base_path, d) for d in os.listdir(si.base_path)
                         if d.startswith("shard_"))
-    return Prepared([scan.HistoryClient(si, stamps, model, rng_for(0))], builds, stores=shard_dirs)
-
-
-def data_documents(work: str, seed: int):
-    from perfbench import corpus, datagen
-
-    path = os.path.join(work, "data")
-    datagen.write(datagen.documents(seed), os.path.join(path, "documents.parquet"))
-    return path, corpus.oracle_answers(path)
-
-
-def setup_corpus_pipeline(spark, work: str, data, rng_for) -> Prepared:
-    """A corpus pipeline runs as a batch job on a fresh session, so its
-    users pay each query's first-run costs (Python workers, code
-    generation) every time: no warm-up. The queries read parquet directly,
-    so the program's set-up is the session alone."""
-    from perfbench import corpus, datagen
-
-    path, oracle = data
-    return Prepared([corpus.CorpusClient(spark, path, oracle)], [], warmup=[], docs=datagen.DOCUMENTS)
-
-
-def data_scan_corpus(work: str, seed: int):
-    return data_lineitem(work, seed), data_documents(work, seed)
-
-
-def setup_scan_corpus(spark, work: str, data, rng_for) -> Prepared:
-    """One analytics session on a fresh process: the ``scan_history`` ops
-    interleaved with one ``corpus_pipeline`` pass, both cold like the
-    corpus alone (a warm-up would cost a whole cycle, ~12 s)."""
-    scan_data, corpus_data = data
-    scan = setup_scan_history(spark, work, scan_data, rng_for)
-    corpus = setup_corpus_pipeline(spark, work, corpus_data, rng_for)
-    both = loop.Interleave(corpus.clients[0], scan.clients[0])
-    return Prepared([both], scan.builds, warmup=[], stores=scan.stores, docs=corpus.docs)
+    both = loop.Interleave(corpus.CorpusClient(spark, docs, oracle),
+                           scan.HistoryClient(si, stamps, model, rng_for(0)))
+    return Prepared([both], builds, warmup=[], stores=shard_dirs, docs=datagen.DOCUMENTS)
 
 
 WORKLOAD_STEPS = {
-    "kv_read": (data_orders, setup_kv_read),
     "txn_mixed": (data_orders, setup_txn_mixed),
-    "scan_history": (data_lineitem, setup_scan_history),
-    "corpus_pipeline": (data_documents, setup_corpus_pipeline),
     "scan_corpus": (data_scan_corpus, setup_scan_corpus),
 }
 
 
 # --------------------------------------------------------------- metrics
+def focus_ms(workload: str, run: loop.Run) -> float:
+    """Latency of one unit of the work the workload exists to measure: a
+    commit on ``txn_mixed``, averaged over the run's commits (3-4, which
+    follow the same insert, update, remove order in every run, so the mean
+    weighs each kind alike where a median of so few picks one); on
+    ``scan_corpus`` one pass of the corpus queries (the four back to back),
+    averaged over the run's passes. NaN when the run has none."""
+    if workload == "txn_mixed":
+        return statistics.fmean(run.ms("commit")) if run.ms("commit") else math.nan
+    passes = len(run.ms(CORPUS_KINDS[0]))
+    return sum(run.ms(*CORPUS_KINDS)) / passes if passes else math.nan
+
+
 def end_to_end(workload: str, run: loop.Run, prep: Prepared, setup_s: float, rss_mb: float) -> dict[str, tuple]:
     """name -> (value, unit, samples); NaN marks a metric the workload does
     not exercise."""
@@ -239,6 +209,7 @@ def end_to_end(workload: str, run: loop.Run, prep: Prepared, setup_s: float, rss
         "op_p50_ms": (pct(all_ms, 50), "ms", len(all_ms)),
         "op_p90_ms": (pct(all_ms, 90), "ms", len(all_ms)),
         "kind_p50_gmean_ms": (gmean, "ms", len(kinds)),
+        "focus_ms": (focus_ms(workload, run), "ms", len(commit) or passes),
         "point_p50_ms": (pct(point, 50), "ms", len(point)),
         "point_p95_ms": (pct(point, 95), "ms", len(point)),
         "multiget_p50_ms": (pct(multi, 50), "ms", len(multi)),
@@ -257,14 +228,14 @@ def end_to_end(workload: str, run: loop.Run, prep: Prepared, setup_s: float, rss
 
 def _manifest_stats(stores: list[str]) -> tuple[float, float]:
     """Mean newest-manifest size (KiB) and mean head file count."""
-    from perfbench.kv import latest_manifest
+    from perfbench.kv import MANIFEST, read_latest
 
     if not stores:
         return 0.0, 0.0
     kb, files = [], []
     for s in stores:
-        m, path = latest_manifest(s, with_path=True)
-        kb.append(os.path.getsize(path) / 1024.0)
+        m, stamp = read_latest(s, MANIFEST)
+        kb.append(os.path.getsize(os.path.join(s, f"{MANIFEST}.v{stamp}.json")) / 1024.0)
         files.append(len(m["versions"][-1]["files"] or []))
     return statistics.mean(kb), statistics.mean(files)
 
@@ -409,13 +380,12 @@ def run(args, work: str, reported: set[str]) -> dict:
 
 def main(argv: Optional[list[str]] = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=sorted(WORKLOAD_STEPS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench_out"),
                     help="where the traced run writes its spans")
-    ap.add_argument("--keep", action="store_true", help="keep the run directory")
     args = ap.parse_args(argv)
 
     if not (os.path.isfile(os.path.join(ROOT, "index_spark", "__init__.py"))
@@ -434,12 +404,11 @@ def main(argv: Optional[list[str]] = None) -> int:
     try:
         out = run(args, work, reported)
     finally:
-        if not args.keep:
-            shutil.rmtree(work, ignore_errors=True)
-            try:
-                os.rmdir(os.path.dirname(work))
-            except OSError:
-                pass
+        shutil.rmtree(work, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(work))
+        except OSError:
+            pass
     print(json.dumps(out), flush=True)
     return 0 if out["correct"] else 1
 

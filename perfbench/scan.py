@@ -1,4 +1,5 @@
-"""``scan_history``: one client of a 4-shard ``ShardedIndex`` of lineitem.
+"""The scan ops of ``scan_corpus``: one client of a 4-shard ``ShardedIndex``
+of lineitem.
 
 The key is the unique 4-column ``(l_orderkey, l_linenumber, l_partkey,
 l_suppkey)``: ``(l_orderkey, l_linenumber)`` repeats in this data (as in
@@ -7,9 +8,9 @@ DUPLICATED_KEYS. Do not shrink or reshape the data to make the 2-column key
 unique; the workload is defined on the 4-column key.
 
 Set-up snapshots the bulk load, then commits ``HISTORY`` cross-shard 64-row
-batches with ``snapshot()`` after each. The model keeps the base rows sorted by key with prefix sums of
-price cents, plus the small batches, so every answer at every recorded era
-is computed without a scan.
+batches with ``snapshot()`` after each. The model keeps the base rows sorted
+by key with prefix sums of price cents, plus the small batches, so every
+answer at every recorded era is computed without a scan.
 """
 
 from __future__ import annotations
